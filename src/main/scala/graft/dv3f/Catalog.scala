@@ -27,11 +27,6 @@ object Catalog {
   def ensureDatabase(spark: SparkSession): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
 
-  /** K2 — idempotent typed table creation over the warehouse parquet
-    * location the upsert writes. DDL is generated from the same
-    * StagingTable config the transform uses — one declarative source of
-    * truth, like the reference's YAML.
-    */
   /** The table's live data dir: Upsert's commit pointer resolved (the
     * upsert protocol keeps each snapshot in an immutable `_v_<n>` dir),
     * or the plain path for flat/pre-protocol layouts.
@@ -51,6 +46,11 @@ object Catalog {
     }
   }
 
+  /** K2 — idempotent typed table creation over the warehouse parquet
+    * location the upsert writes. DDL is generated from the same
+    * StagingTable config the transform uses — one declarative source of
+    * truth, like the reference's YAML.
+    */
   def ensureStagingTable(spark: SparkSession, warehouseDir: String,
       table: StagingTable): Unit = {
     ensureDatabase(spark)

@@ -44,8 +44,8 @@ object IngestJob {
     * throws (D4 error isolation).
     */
   def runBranch(spark: SparkSession, fetch: Fetcher, warehouseDir: String)(
-      scope: String, code: String): BranchReport = {
-    Try {
+      scope: String, code: String): BranchReport =
+    report(scope, code) {
       val table = Dv3fConfig.route(scope)
       val wide = JsonFlatten.flattenResults(spark, fetch(scope, code))
       val staged = Reshape.transform(wide, table)
@@ -53,14 +53,17 @@ object IngestJob {
       Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
       Catalog.repointIfRegistered(spark, warehouseDir, table)
       n
-    } match {
-      case Success(n) =>
-        val r = BranchReport(scope, code, n, None)
-        RunLog.branch(r); r
-      case Failure(e) =>
-        val r = BranchReport(scope, code, 0, Some(e.toString))
-        RunLog.branch(r); r
     }
+
+  /** Run one unit of work, log and return its report: the row count on
+    * success, the error (never thrown) on failure.
+    */
+  private def report(scope: String, code: String)(work: => Long): BranchReport = {
+    val r = Try(work) match {
+      case Success(n) => BranchReport(scope, code, n, None)
+      case Failure(e) => BranchReport(scope, code, 0, Some(e.toString))
+    }
+    RunLog.branch(r); r
   }
 
   /** Full run over the configured fan-out (D1/D2): sequential like the
@@ -84,7 +87,7 @@ object IngestJob {
     val longDf = spark.read.format("dv3f")
       .option("path", payloadDir).load()
     Dv3fConfig.staging.map { table =>
-      Try {
+      report(table.scope, "*") {
         val staged = graft.sources.Dv3fSource.stage(longDf, table)
         val n = staged.count()
         if (n > 0) {
@@ -92,13 +95,6 @@ object IngestJob {
           Catalog.repointIfRegistered(spark, warehouseDir, table)
         }
         n
-      } match {
-        case Success(n) =>
-          val r = BranchReport(table.scope, "*", n, None)
-          RunLog.branch(r); r
-        case Failure(e) =>
-          val r = BranchReport(table.scope, "*", 0, Some(e.toString))
-          RunLog.branch(r); r
       }
     }
   }

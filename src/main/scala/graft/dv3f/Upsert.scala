@@ -1,15 +1,33 @@
 package graft.dv3f
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+
+/** A commit lost its optimistic-concurrency race: a rival published
+  * first. Retryable — re-reading the snapshot and re-merging converges
+  * (the keyed merges are idempotent); every [[Upsert]] commit face does
+  * so a bounded number of times before surfacing it. Subclasses
+  * IllegalStateException so callers that matched the old contract keep
+  * working.
+  */
+final class CommitRaceException(msg: String) extends IllegalStateException(msg)
 
 /** Keyed, name-based upsert — the Spark equivalent of the reference's
   * `INSERT OR REPLACE INTO <t> BY NAME` (reference:
   * scripts/extract_load.py:233-240). Last-writer-wins on the key columns;
   * incoming columns are matched BY NAME, missing declared columns are
   * NULL-filled, extra columns are dropped.
+  *
+  * ONE COMMIT PATH, FOUR FACES. [[upsertByName]] and [[mergeCdc]] commit
+  * an unpartitioned table, [[upsertByNamePartitioned]] and
+  * [[mergeCdcPartitioned]] a partitioned one; the upsert faces merge by
+  * key anti-join + union, the CDC faces by [[graft.ops.CdcMerge]]'s
+  * latest-wins I/U/D. Everything else — snapshot resolution, layout
+  * guards, flat-layout adoption, the pruned base scan, the data-dir
+  * write, publish, vacuum and race retry — is one private path shared
+  * by all four, so the faces cannot drift apart.
   *
   * TRANSACTIONAL VISIBILITY. DuckDB gives the reference an atomic
   * INSERT OR REPLACE; plain parquet has no MERGE and no atomic rewrite,
@@ -34,7 +52,7 @@ import org.apache.spark.sql.functions._
   *     would win max() and silently bury the rival's commit). A writer
   *     stalled so long its slot was vacuumed is caught by the publish
   *     pre-check (chain already past n). Losers throw
-  *     [[CommitRaceException]]; both upsert faces retry internally
+  *     [[CommitRaceException]]; every face retries internally
   *     against the fresh snapshot (idempotent merge ⇒ convergence),
   *     and a private data dir per attempt means a loser's write can
   *     never clobber the winner's published files (its orphan dir is
@@ -53,29 +71,21 @@ import org.apache.spark.sql.functions._
   * The `_v_`/`_commit_` prefixes keep the protocol invisible to a naive
   * `spark.read.parquet(targetPath)`: underscore-prefixed paths are
   * hidden from Spark's file listing, so pre-protocol FLAT layouts (data
-  * files directly under targetPath) still read correctly and are
-  * treated as the version-0 snapshot by the first versioned commit.
+  * files, or `pcol=` partition dirs, directly under targetPath) still
+  * read correctly and are adopted as the version-0 snapshot by the
+  * first versioned commit of any face.
   *
   * At 100 TB the unpartitioned rewrite is the scaling hazard;
   * mitigations built in:
-  *   - [[upsertByNamePartitioned]] rewrites only the partitions present
-  *     in the batch (each commit's dir holds just those; the marker
-  *     maps every partition to the dir that last wrote it);
+  *   - the partitioned faces rewrite only the partitions present in the
+  *     batch (each commit's dir holds just those; the marker maps every
+  *     partition to the dir that last wrote it);
   *   - the anti-join broadcasts the NEW side when it is small (the
   *     common ingest shape: small delta vs huge target), so no shuffle
   *     of the target occurs;
   *   - with a lakehouse table format this whole object is a one-line
   *     MERGE INTO — the API is format-agnostic on purpose.
   */
-/** A commit lost its optimistic-concurrency race: a rival published
-  * first. Retryable — re-reading the snapshot and re-merging converges
-  * (the keyed upsert is idempotent); [[Upsert.upsertByName]] and
-  * [[Upsert.upsertByNamePartitioned]] do so a bounded number of times
-  * before surfacing it. Subclasses IllegalStateException so callers
-  * that matched the old contract keep working.
-  */
-final class CommitRaceException(msg: String) extends IllegalStateException(msg)
-
 object Upsert {
 
   private val VPrefix = "_v_"
@@ -124,12 +134,26 @@ object Upsert {
   /** Align `df` to the declared schema by name: missing → typed NULL,
     * extra dropped, order fixed (the BY NAME half of INSERT OR REPLACE).
     */
-  def alignByName(df: DataFrame, table: StagingTable): DataFrame = {
+  def alignByName(df: DataFrame, table: StagingTable): DataFrame =
+    df.select(alignedColumns(df, table): _*)
+
+  private def alignedColumns(df: DataFrame, table: StagingTable): Seq[Column] = {
     val present = df.columns.toSet
-    df.select(table.schema.fields.map { f =>
+    table.schema.fields.map { f =>
       if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
+    }.toIndexedSeq
+  }
+
+  /** [[alignByName]] for a CDC change batch: the declared columns, then
+    * `opCol` and `seqCol` carried through for the latest-wins merge.
+    */
+  private def alignChanges(changes: DataFrame, table: StagingTable,
+      seqCol: String, opCol: String, face: String): DataFrame = {
+    val present = changes.columns.toSet
+    require(present(opCol) && present(seqCol),
+      s"$face: changes must carry '$opCol' and '$seqCol' columns")
+    changes.select(alignedColumns(changes, table) ++ Seq(col(opCol), col(seqCol)): _*)
   }
 
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) =
@@ -249,6 +273,16 @@ object Upsert {
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
+
+  /** Values of the `pcol=` partition dirs directly under `dir`. Dir
+    * names carry Hive path-escaping (space → %20 etc.); unescaped, they
+    * compare equal to raw batch values and marker keys.
+    */
+  private def partitionValues(fs: FileSystem, dir: Path, pcol: String): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$pcol="))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(s"$pcol=")))
 
   /** Resolve a marker's dir token to a full path. Tokens: `.` = the
     * pre-protocol flat root; a bare number = legacy `_v_<n>` layout
@@ -416,24 +450,6 @@ object Upsert {
   // marker rename to collide — the stale writer throws and retries
   // against the new snapshot.
 
-  /** Dir names (tokens) a marker's snapshot still references. */
-  private def referencedDirNames(fs: FileSystem, target: Path, n: Long): Set[String] = {
-    val content = readMarker(fs, target, n)
-    val lines = content.linesIterator.toSeq
-    lines.find(_.startsWith("#dir:")) match {
-      case Some(d) => Set(d.stripPrefix("#dir:"))
-      case None if content.isEmpty => Set(s"$VPrefix$n") // legacy unpartitioned
-      case None =>
-        lines.filter(l => !l.startsWith("#") && l.contains("=")).map { line =>
-          line.split("=", 2)(1) match {
-            case RootDir | "0" => RootDir
-            case t if t.forall(_.isDigit) => s"$VPrefix$t"
-            case t => t
-          }
-        }.toSet
-    }
-  }
-
   /** Drop snapshots no longer reachable from the last [[keepCommits]]
     * markers: their data dirs and markers are deleted; dirs referenced
     * by a retained marker survive even if written long ago (a partition
@@ -445,8 +461,9 @@ object Upsert {
     val commits = commitNumbers(fs, target).sorted
     if (commits.isEmpty) return
     val keep = commits.takeRight(keepCommits)
-    val referenced: Set[String] =
-      keep.flatMap(n => referencedDirNames(fs, target, n)).toSet
+    val root = target.toString
+    val referenced: Set[String] = keep.flatMap(n =>
+      parseSnapshot(readMarker(fs, target, n), root, n).values.map(tokenOf(root, _))).toSet
     commits.dropRight(keepCommits)
       .foreach(n => fs.delete(new Path(target, s"$CPrefix$n"), false))
     // unreferenced data dirs: superseded snapshots and race-losers'
@@ -492,7 +509,7 @@ object Upsert {
 
   /** Run `f`, retrying on [[CommitRaceException]]: the loser's correct
     * move is always "re-read the new snapshot and re-merge" (the keyed
-    * upsert is idempotent), so both upsert faces converge under
+    * merges are idempotent), so every face converges under
     * contention instead of surfacing every genuine race to the caller.
     */
   private def withRaceRetry[A](f: => A): A = {
@@ -505,6 +522,7 @@ object Upsert {
     throw last
   }
 
+
   /** Upsert `incoming` into the versioned table at `targetPath` keyed
     * on `table.primaryKey`. Idempotent: re-running the same batch
     * converges (SURVEY.md §7.4.3); each run is one atomic commit.
@@ -513,51 +531,8 @@ object Upsert {
     */
   def upsertByName(spark: SparkSession, targetPath: String,
       incoming: DataFrame, table: StagingTable): Unit =
-    withRaceRetry(upsertByNameOnce(spark, targetPath, incoming, table))
-
-  private def upsertByNameOnce(spark: SparkSession, targetPath: String,
-      incoming: DataFrame, table: StagingTable): Unit = {
-    val aligned = alignByName(incoming, table)
-    val key = table.primaryKey
-    val (fs, target) = fsFor(spark, targetPath)
-    // gate BEFORE any data write: on an unsafe FS the flow must die
-    // here, not after shipping a (possibly huge) parquet dir whose
-    // publish is doomed (publish re-checks — this is the cheap exit)
-    requireAtomicRename(fs)
-
-    // base snapshot and commit number resolve from ONE observation; the
-    // published commit is base+1, so a commit landing in between makes
-    // the marker rename collide (see the gapless-chain note above)
-    val baseCommit = currentCommit(fs, target)
-    val existing = baseCommit.map(n =>
-      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
-      case Some(snap) => Some(spark.read.parquet(snap.getOrElse("",
-        throw new IllegalStateException(s"$targetPath was committed by the " +
-          "PARTITIONED upsert; use upsertByNamePartitioned/read on it"))))
-      case None if hasFlatData(fs, target) =>
-        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
-      case None => None
-    }
-    val merged = existing match {
-      case None => aligned
-      case Some(e) =>
-        // Align the EXISTING side to the declared schema as well: when
-        // the table declaration evolves (the reference's API adds an
-        // indicator column some year), rows written under the old
-        // schema read back NULL in the new column and dropped columns
-        // vanish — the declared schema is the contract, for both sides.
-        // broadcast(new side) => no shuffle of the big target.
-        alignByName(e, table)
-          .join(broadcast(aligned.select(key)), Seq(key), "left_anti")
-          .unionByName(aligned)
-    }
-    val n = baseCommit.getOrElse(0L) + 1
-    val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-    publish(fs, target, n, s"#dir:$dirName")
-    vacuum(fs, target)
-  }
+    withRaceRetry(commit(spark, targetPath, table, None, "upsertByName",
+      alignByName(incoming, table))(replaceByKey(table.primaryKey)))
 
   /** Transactional CDC MERGE: apply a change batch (declared columns +
     * `opCol` ∈ {I,U,D} + `seqCol`) to the current snapshot with
@@ -576,47 +551,9 @@ object Upsert {
   def mergeCdc(spark: SparkSession, targetPath: String,
       changes: DataFrame, table: StagingTable,
       seqCol: String = "seq", opCol: String = "op"): Unit =
-    withRaceRetry(mergeCdcOnce(spark, targetPath, changes, table, seqCol, opCol))
-
-  private def mergeCdcOnce(spark: SparkSession, targetPath: String,
-      changes: DataFrame, table: StagingTable,
-      seqCol: String, opCol: String): Unit = {
-    // align the payload to the declared schema but carry op/seq through
-    val present = changes.columns.toSet
-    require(present(opCol) && present(seqCol),
-      s"mergeCdc: changes must carry '$opCol' and '$seqCol' columns")
-    val alignedChanges = changes.select(
-      (table.schema.fields.map { f =>
-        if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col(opCol), col(seqCol))).toIndexedSeq: _*)
-    val (fs, target) = fsFor(spark, targetPath)
-    requireAtomicRename(fs) // fail before the data write, not after
-
-    val baseCommit = currentCommit(fs, target)
-    val existing = baseCommit.map(n =>
-      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
-      case Some(snap) => Some(spark.read.parquet(snap.getOrElse("",
-        throw new IllegalStateException(s"$targetPath was committed by the " +
-          "PARTITIONED upsert; mergeCdc supports unpartitioned tables"))))
-      case None if hasFlatData(fs, target) =>
-        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
-      case None => None
-    }
-    val base = existing match {
-      case Some(e) => alignByName(e, table)
-      case None => // empty base with the declared schema: I/U rows insert
-        alignByName(changes.limit(0), table)
-    }
-    val merged = graft.ops.CdcMerge.applyLatestWins(
-      base, alignedChanges, Seq(table.primaryKey), seqCol, opCol)
-    val n = baseCommit.getOrElse(0L) + 1
-    val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-    publish(fs, target, n, s"#dir:$dirName")
-    vacuum(fs, target)
-  }
+    withRaceRetry(commit(spark, targetPath, table, None, "mergeCdc",
+      alignChanges(changes, table, seqCol, opCol, "mergeCdc"))(
+      graft.ops.CdcMerge.applyLatestWins(_, _, Seq(table.primaryKey), seqCol, opCol)))
 
   /** Partitioned CDC MERGE — [[mergeCdc]]'s 100 TB shape: only the
     * partitions PRESENT IN THE CHANGE BATCH are read (partition-pruned
@@ -632,77 +569,10 @@ object Upsert {
   def mergeCdcPartitioned(spark: SparkSession, targetPath: String,
       changes: DataFrame, table: StagingTable, partitionCol: String,
       seqCol: String = "seq", opCol: String = "op"): Unit =
-    withRaceRetry(mergeCdcPartitionedOnce(
-      spark, targetPath, changes, table, partitionCol, seqCol, opCol))
-
-  private def mergeCdcPartitionedOnce(spark: SparkSession, targetPath: String,
-      changes: DataFrame, table: StagingTable, partitionCol: String,
-      seqCol: String, opCol: String): Unit = {
-    val present = changes.columns.toSet
-    require(present(opCol) && present(seqCol),
-      s"mergeCdcPartitioned: changes must carry '$opCol' and '$seqCol' columns")
-    val alignedChanges = changes.select(
-      (table.schema.fields.map { f =>
-        if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col(opCol), col(seqCol))).toIndexedSeq: _*)
-    val key = table.primaryKey
-    val (fs, target) = fsFor(spark, targetPath)
-    requireAtomicRename(fs) // fail before the data write, not after
-
-    val baseCommit = currentCommit(fs, target)
-    val contentOpt = baseCommit.map(n => (n, readMarker(fs, target, n)))
-    val snapOpt = contentOpt.map { case (n, c) => parseSnapshot(c, targetPath, n) }
-    contentOpt.foreach { case (_, content) =>
-      val snap = snapOpt.get
-      if (snap.contains("")) throw new IllegalStateException(
-        s"$targetPath was committed by the UNPARTITIONED upsert; " +
-          "use mergeCdc/read on it")
-      val pc = parsePartitionCol(content).getOrElse(
-        throw new IllegalStateException(
-          s"marker at $targetPath has no partition column header"))
-      require(pc == partitionCol,
-        s"$targetPath is partitioned by '$pc', not '$partitionCol'")
-    }
-    val prev: Map[String, String] = snapOpt.getOrElse(Map.empty)
-
-    val affectedRaw = alignedChanges.select(partitionCol).distinct().collect()
-    require(!affectedRaw.exists(_.isNullAt(0)),
-      s"mergeCdcPartitioned: batch contains NULL in partition column " +
-        s"'$partitionCol' — every change row must carry its partition")
-    val affected = affectedRaw.map(_.get(0).toString).toSeq
-    require(!affected.contains(""),
-      s"mergeCdcPartitioned: batch contains empty-string in partition " +
-        s"column '$partitionCol'")
-    if (affected.isEmpty) return
-
-    val existingAffected = prev.filter(kv => affected.contains(kv._1))
-      .groupBy(_._2).map { case (dir, parts) =>
-        alignByName(scanPartitionAsString(spark, dir, partitionCol)
-          .filter(col(partitionCol).isin(parts.keys.toSeq: _*)), table)
-      }.reduceOption(_ unionByName _)
-
-    val base = existingAffected.getOrElse(alignByName(changes.limit(0), table))
-    val merged = graft.ops.CdcMerge.applyLatestWins(
-      base, alignedChanges, Seq(key), seqCol, opCol)
-    val n = baseCommit.getOrElse(0L) + 1
-    val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-
-    // deletes can empty a partition: only partitions with surviving
-    // rows stay in the map — a fully-deleted partition vanishes
-    val surviving = merged.select(partitionCol).distinct().collect()
-      .map(_.get(0).toString).toSet
-    val prevTokens = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) }
-    val newMap = (prevTokens -- affected) ++
-      affected.filter(surviving).map(_ -> dirName)
-    val content = s"#partitionCol:$partitionCol\n$EncHeader\n" +
-      newMap.toSeq.sortBy(_._1)
-        .map { case (pv, d) => s"${encodeValue(pv)}=$d" }.mkString("\n")
-    publish(fs, target, n, content)
-    vacuum(fs, target)
-  }
+    withRaceRetry(commit(spark, targetPath, table, Some(partitionCol),
+      "mergeCdcPartitioned",
+      alignChanges(changes, table, seqCol, opCol, "mergeCdcPartitioned"))(
+      graft.ops.CdcMerge.applyLatestWins(_, _, Seq(table.primaryKey), seqCol, opCol)))
 
   /** Partitioned upsert — the 100 TB shape. Only the partitions PRESENT
     * IN THE BATCH are read (partition-pruned scan), merged (anti-join
@@ -714,92 +584,117 @@ object Upsert {
     */
   def upsertByNamePartitioned(spark: SparkSession, targetPath: String,
       incoming: DataFrame, table: StagingTable, partitionCol: String): Unit =
-    withRaceRetry(
-      upsertByNamePartitionedOnce(spark, targetPath, incoming, table, partitionCol))
+    withRaceRetry(commit(spark, targetPath, table, Some(partitionCol),
+      "upsertByNamePartitioned", alignByName(incoming, table))(
+      replaceByKey(table.primaryKey)))
 
-  private def upsertByNamePartitionedOnce(spark: SparkSession, targetPath: String,
-      incoming: DataFrame, table: StagingTable, partitionCol: String): Unit = {
-    val aligned = alignByName(incoming, table)
-    val key = table.primaryKey
+  /** INSERT OR REPLACE: base rows whose key the batch carries give way
+    * to the batch. broadcast(new side) => no shuffle of the big target.
+    */
+  private def replaceByKey(key: String)(base: DataFrame, batch: DataFrame): DataFrame =
+    base.join(broadcast(batch.select(key)), Seq(key), "left_anti").unionByName(batch)
+
+  /** One commit attempt, shared by every face: resolve the base
+    * snapshot, read the part of it the batch touches, `merge(base,
+    * batch)` into a private data dir, publish it as commit base+1 and
+    * vacuum. `batch` is already aligned to the declared schema (CDC
+    * faces carry op/seq as well). `partitionCol` None commits the whole
+    * table as one dir; Some(pcol) rewrites only the batch's partitions.
+    * `face` names the caller in error messages.
+    */
+  private def commit(spark: SparkSession, targetPath: String,
+      table: StagingTable, partitionCol: Option[String], face: String,
+      batch: DataFrame)(merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val (fs, target) = fsFor(spark, targetPath)
-    requireAtomicRename(fs) // fail before the data write, not after
+    // gate BEFORE any data write: on an unsafe FS the flow must die
+    // here, not after shipping a (possibly huge) parquet dir whose
+    // publish is doomed (publish re-checks — this is the cheap exit)
+    requireAtomicRename(fs)
 
-    // previous snapshot: marker map, or the flat layout's partition
-    // dirs adopted as version 0. Base commit, snapshot AND partition
-    // column resolve from ONE marker read; the published commit is
-    // base+1 (gapless chain).
-    val baseCommit = currentCommit(fs, target)
-    val contentOpt = baseCommit.map(n => (n, readMarker(fs, target, n)))
-    val snapOpt = contentOpt.map { case (n, c) => parseSnapshot(c, targetPath, n) }
-    contentOpt.foreach { case (_, content) =>
-      // mirror of the unpartitioned guard: merging a partitioned batch
-      // onto an unpartitioned snapshot would carry its "" key into the
-      // new marker and silently drop every pre-existing row whose
-      // partition value is absent from this batch
-      val snap = snapOpt.get
-      if (snap.contains("")) throw new IllegalStateException(
-        s"$targetPath was committed by the UNPARTITIONED upsert; " +
-          "use upsertByName/read on it")
-      val pc = parsePartitionCol(content).getOrElse(
-        throw new IllegalStateException(
-          s"marker at $targetPath has no partition column header"))
-      require(pc == partitionCol,
-        s"$targetPath is partitioned by '$pc', not '$partitionCol'")
+    // base commit, snapshot AND partition column resolve from ONE
+    // marker read; the published commit is base+1, so a commit landing
+    // in between makes the marker rename collide (see the gapless-chain
+    // note above)
+    val marker = currentCommit(fs, target).map(n => (n, readMarker(fs, target, n)))
+    val snap = marker.map { case (n, content) => parseSnapshot(content, targetPath, n) }
+    (partitionCol, marker) match {
+      case (None, Some(_)) if !snap.get.contains("") =>
+        throw new IllegalStateException(s"$targetPath was committed by a " +
+          s"PARTITIONED face; use ${face}Partitioned/read on it")
+      case (Some(pcol), Some((_, content))) =>
+        // merging a partitioned batch onto an unpartitioned snapshot
+        // would carry its "" key into the new marker and silently drop
+        // every pre-existing row whose partition value is absent from
+        // this batch
+        if (snap.get.contains("")) throw new IllegalStateException(
+          s"$targetPath was committed by an UNPARTITIONED face; " +
+            s"use ${face.stripSuffix("Partitioned")}/read on it")
+        val pc = parsePartitionCol(content).getOrElse(
+          throw new IllegalStateException(
+            s"marker at $targetPath has no partition column header"))
+        require(pc == pcol, s"$targetPath is partitioned by '$pc', not '$pcol'")
+      case _ =>
     }
-    val prev: Map[String, String] = snapOpt.getOrElse {
-      if (!fs.exists(target)) Map.empty
-      else fs.listStatus(target).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith(s"$partitionCol="))
-        // dir names carry Hive path-escaping (space → %20 etc.);
-        // unescape so adopted values compare equal to raw batch values
-        .map(n => ExternalCatalogUtils.unescapePathName(
-          n.stripPrefix(s"$partitionCol=")) -> targetPath).toMap
-    }
-    val affectedRaw = aligned.select(partitionCol).distinct().collect()
-    // the marker maps partition VALUES to data dirs — a null value has
-    // no stable directory name (Hive's __HIVE_DEFAULT_PARTITION__ is a
-    // write-side artifact), so reject it loudly instead of NPE-ing or
-    // silently mis-routing rows
-    require(!affectedRaw.exists(_.isNullAt(0)),
-      s"upsertByNamePartitioned: batch contains NULL in partition column " +
-        s"'$partitionCol' — partition keys must be non-null")
-    val affected = affectedRaw.map(_.get(0).toString).toSeq
-    // "" is as unroutable as null: partitionBy writes it as the Hive
-    // default-partition sentinel (reads back NULL, so the rows turn
-    // invisible) and its marker line would parse to the "" key that
-    // flags an unpartitioned snapshot
-    require(!affected.contains(""),
-      s"upsertByNamePartitioned: batch contains empty-string in partition " +
-        s"column '$partitionCol' — partition keys must be non-empty")
-    if (affected.isEmpty) return // empty batch: nothing to commit
+    // previous snapshot: partition value → data dir ("" when
+    // unpartitioned); before the first marker, a pre-protocol flat
+    // layout is adopted as version 0
+    val prev: Map[String, String] = snap.getOrElse(partitionCol match {
+      case None => if (hasFlatData(fs, target)) Map("" -> targetPath) else Map.empty
+      case Some(pcol) => partitionValues(fs, target, pcol).map(_ -> targetPath).toMap
+    })
 
-    val existingAffected = prev.filter(kv => affected.contains(kv._1))
-      .groupBy(_._2).map { case (dir, parts) =>
-        // partition-pruned: only the affected partition dirs are read,
-        // with the partition value taken VERBATIM as string (see
-        // scanPartitionAsString) so it compares against the marker's
-        // raw keys; alignByName casts back to the declared schema.
-        alignByName(scanPartitionAsString(spark, dir, partitionCol)
-          .filter(col(partitionCol).isin(parts.keys.toSeq: _*)), table)
-      }.reduceOption(_ unionByName _)
-
-    val merged = existingAffected match {
-      case None => aligned
-      case Some(e) =>
-        e.join(broadcast(aligned.select(key)), Seq(key), "left_anti")
-          .unionByName(aligned)
+    // the partitions this commit rewrites: the whole table, or the
+    // batch's own partition values
+    val affected: Set[String] = partitionCol.fold(Set("")) { pcol =>
+      val raw = batch.select(pcol).distinct().collect()
+      // the marker maps partition VALUES to data dirs — a null value has
+      // no stable directory name (Hive's __HIVE_DEFAULT_PARTITION__ is a
+      // write-side artifact), so reject it loudly instead of NPE-ing or
+      // silently mis-routing rows
+      require(!raw.exists(_.isNullAt(0)),
+        s"$face: batch contains NULL in partition column '$pcol' — " +
+          "partition keys must be non-null")
+      val values = raw.map(_.get(0).toString).toSet
+      // "" is as unroutable as null: partitionBy writes it as the Hive
+      // default-partition sentinel (reads back NULL, so the rows turn
+      // invisible) and its marker line would parse to the "" key that
+      // flags an unpartitioned snapshot
+      require(!values.contains(""),
+        s"$face: batch contains empty-string in partition column '$pcol' — " +
+          "partition keys must be non-empty")
+      values
     }
-    val n = baseCommit.getOrElse(0L) + 1
+    if (affected.isEmpty) return // empty partitioned batch: nothing to commit
+
+    // partition-pruned: only the affected partitions are read, with the
+    // partition value taken VERBATIM as string (see
+    // scanPartitionAsString) so it compares against the marker's raw
+    // keys. Both sides are aligned to the declared schema: when the
+    // declaration evolves, rows written under the old one read back
+    // NULL in a new column and dropped columns vanish.
+    val base = prev.filter(kv => affected(kv._1)).groupBy(_._2).map { case (dir, parts) =>
+      alignByName(partitionCol.fold(spark.read.parquet(dir)) { pcol =>
+        scanPartitionAsString(spark, dir, pcol).filter(col(pcol).isin(parts.keys.toSeq: _*))
+      }, table)
+    }.reduceOption(_ unionByName _)
+      .getOrElse(alignByName(batch.limit(0), table)) // empty, declared schema
+
+    val n = marker.fold(0L)(_._1) + 1
     val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+    val writer = merge(base, batch).write.mode(SaveMode.Overwrite)
+    partitionCol.fold(writer)(writer.partitionBy(_))
       .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
 
-    // prior owners keep their dirs, affected partitions move to this one
-    val prevTokens = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) }
-    val newMap = prevTokens ++ affected.map(_ -> dirName)
-    val content = s"#partitionCol:$partitionCol\n$EncHeader\n" +
-      newMap.toSeq.sortBy(_._1)
+    val content = partitionCol.fold(s"#dir:$dirName") { pcol =>
+      // untouched partitions keep their dirs; affected ones move to this
+      // commit's dir if rows survived there — a partition whose rows
+      // were all deleted vanishes from the map
+      val written = partitionValues(fs, new Path(target, dirName), pcol)
+      val next = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) } --
+        affected ++ written.map(_ -> dirName)
+      s"#partitionCol:$pcol\n$EncHeader\n" + next.toSeq.sortBy(_._1)
         .map { case (pv, d) => s"${encodeValue(pv)}=$d" }.mkString("\n")
+    }
     publish(fs, target, n, content)
     vacuum(fs, target)
   }

@@ -44,6 +44,10 @@ object Bfs {
     * NULL where the seed set is farther than `rounds` hops. Edges must
     * be the canonical (doc_a < doc_b) pair relation; `isSeed` is
     * evaluated against the vertex id column.
+    *
+    * The result is an UNPINNED plan `rounds` joins deep, meant for a
+    * single action: every further action re-runs all the rounds, so a
+    * caller that consumes it twice pins it first.
     */
   def run(edges: DataFrame, isSeed: Column => Column, rounds: Int): DataFrame = {
     val und = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -35,6 +35,10 @@ object LabelPropagation {
     * canonical (doc_a < doc_b) pair relation. Initial label = own id;
     * every vertex in the edge list has ≥ 1 neighbor, so the argmax is
     * always defined.
+    *
+    * The result is an UNPINNED plan `rounds` sweeps deep, meant for a
+    * single action: every further action re-runs all the rounds, so a
+    * caller that consumes it twice pins it first.
     */
   def run(edges: DataFrame, rounds: Int): DataFrame = {
     val und = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -1608,7 +1608,8 @@ object LlmOps {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("u"))
     val per = grams.groupBy(col("source"), col("doc_id"))
       .agg(count(lit(1)).as("g"))
-      .join(uniqByDoc, Seq("doc_id"), "left") // doc-sized, broadcast
+      // doc-sized: AQE is expected to broadcast uniqByDoc (no hint given)
+      .join(uniqByDoc, Seq("doc_id"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("g")).as("grams"),
         sum(coalesce(col("u"), lit(0L))).as("unique_grams"))

@@ -120,23 +120,32 @@ class UpsertSpec extends SparkSpec {
   test("partitioned: pre-protocol flat layout is adopted as version 0") {
     import spark.implicits._
     val table = Dv3fConfig.departement
-    val dir = java.nio.file.Files.createTempDirectory("upsert_legacy").toString + "/t"
-    // a pre-protocol writer laid the table out flat (partition dirs at
-    // the root, no markers)
-    Seq(("a1", "2019", "85", 1L), ("b1", "2020", "85", 2L))
-      .toDF("uid", "annee", "dep", "nbtrans")
-      .write.partitionBy("annee").parquet(dir)
-    // first versioned commit touches only 2020; 2019 must keep being
-    // served from the adopted root (version 0), merged transparently
-    Upsert.upsertByNamePartitioned(spark, dir,
-      Seq(("b1", "2020", "85", 9L)).toDF("uid", "annee", "dep", "nbtrans"),
-      table, "annee")
-    val got = Upsert.read(spark, dir)
-      .select("uid", "annee", "nbtrans").collect()
-      .map(r => (r.getString(0), r.get(1).toString, r.getLong(2))).toSet
-    assert(got == Set(("a1", "2019", 1L), ("b1", "2020", 9L)))
-    val snap = Upsert.currentSnapshot(spark, dir).get
-    assert(snap("2019") == dir && snap("2020") != dir)
+    // both partitioned faces: the upsert and the CDC merge (as an update)
+    val faces: Seq[(String, (String, org.apache.spark.sql.DataFrame) => Unit)] = Seq(
+      "upsertByNamePartitioned" -> ((dir, batch) =>
+        Upsert.upsertByNamePartitioned(spark, dir, batch, table, "annee")),
+      "mergeCdcPartitioned" -> ((dir, batch) =>
+        Upsert.mergeCdcPartitioned(spark, dir,
+          batch.withColumn("op", lit("U")).withColumn("seq", lit(1L)),
+          table, "annee")))
+    faces.foreach { case (face, commit) =>
+      val dir = java.nio.file.Files.createTempDirectory("upsert_legacy").toString + "/t"
+      // a pre-protocol writer laid the table out flat (partition dirs at
+      // the root, no markers)
+      Seq(("a1", "2019", "85", 1L), ("b0", "2020", "85", 5L), ("b1", "2020", "85", 2L))
+        .toDF("uid", "annee", "dep", "nbtrans")
+        .write.partitionBy("annee").parquet(dir)
+      // first versioned commit touches only 2020; 2019 must keep being
+      // served from the adopted root (version 0), and 2020's existing
+      // rows merged with the batch, not replaced by it
+      commit(dir, Seq(("b1", "2020", "85", 9L)).toDF("uid", "annee", "dep", "nbtrans"))
+      val got = Upsert.read(spark, dir)
+        .select("uid", "annee", "nbtrans").collect()
+        .map(r => (r.getString(0), r.get(1).toString, r.getLong(2))).toSet
+      assert(got == Set(("a1", "2019", 1L), ("b0", "2020", 5L), ("b1", "2020", 9L)), face)
+      val snap = Upsert.currentSnapshot(spark, dir).get
+      assert(snap("2019") == dir && snap("2020") != dir, s"$face: $snap")
+    }
   }
 
   test("concurrent reader keeps a consistent snapshot across a commit") {

@@ -24,34 +24,21 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-# Fallback mirror of graft.Bench.stagedInputCells (the authoritative
-# list rides every Bench JSON line since round 14); see BASELINE.md
-# "Staged-input cells" / "Basis-mismatch cell": oracle timings for these
-# include derivation work the Spark side stages out per JVM (or, for
-# binaryfile, Spark does file-per-object I/O the oracle computes
-# closed-form; for the IVM faces, the oracle recomputes a view the
-# engine maintains) — their per-query ratios are not engine-vs-engine.
-STAGED_CELLS = [
-    "q_cdc_merge", "q_events_json", "q_binaryfile_scan",
-    "q_ingest_gate_e2e", "q_quality_classifier",
-    "q_bpe_merges", "q_phrase_search", "q_phrase_search_incr",
-    "q_index_stats",
-    "q_wordpiece_vocab", "q_wordpiece_encode", "q_wordpiece_ids",
-    "q_minpiece_encode", "q_token_blocks",
-    "q_block_provenance", "q_block_decontam",
-    "q_embed_ann_ivf", "q_embed_ann_ivf_indexed", "q_embed_recall",
-    "q_embed_drift", "q_dedup_semantic", "q_sample_cluster_balanced",
-    "q_embed_ivf_append", "q_embed_ivf_sq8", "q_embed_ivf_sq8_append",
-    "q_embed_ivfpq_append",
-    "q_attribution_stream", "q_ivm_stream", "q_blocklist_stream",
-    "q_para_dedup_stream", "q_para_dedup_incr",
-    "q_ivm_aggregate", "q_ivm_join", "q_ivm_join_dim", "q_ivm_minmax",
-    "q_ivm_minmax_stream",
-    "q_dedup_doc_coverage",
-    "q_trgm_like_scan", "q_trgm_like_incr"]
-
-
 def main(sf_dir, out_dir, *spark_jsons):
+    # Staged-input cells (BASELINE.md "Staged-input cells"): their oracle
+    # timings include work the Spark side stages out per JVM, so their
+    # ratios are not engine-vs-engine. graft.Bench.stagedInputCells is
+    # the only list; it rides every Bench JSON line, so without a
+    # receipt there is nothing to label.
+    staged = []
+    if spark_jsons:
+        try:
+            staged = next(json.loads(ln)["staged_input_cells"]
+                          for ln in open(spark_jsons[0])
+                          if ln.strip() and "staged_input_cells" in ln)
+        except (StopIteration, KeyError, json.JSONDecodeError):
+            sys.exit(f"{spark_jsons[0]}: no staged_input_cells in the "
+                     "Spark receipt")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -71,14 +58,6 @@ def main(sf_dir, out_dir, *spark_jsons):
             best = dt if best is None else min(best, dt)
         if best is not None:
             duck[name] = best
-    staged = STAGED_CELLS
-    if spark_jsons:  # prefer the list embedded in the Spark receipt
-        try:
-            staged = next(json.loads(ln)["staged_input_cells"]
-                          for ln in open(spark_jsons[0])
-                          if ln.strip() and "staged_input_cells" in ln)
-        except (StopIteration, KeyError, json.JSONDecodeError):
-            pass
     print(json.dumps({"duck_total": round(sum(duck.values()), 2),
                       "queries": {k: round(v, 3) for k, v in duck.items()},
                       "staged_input_cells": staged}))
